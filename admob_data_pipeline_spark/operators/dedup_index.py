@@ -52,7 +52,7 @@ from admob_data_pipeline_spark.operators.dedup import (
     minhash_signatures,
 )
 from admob_data_pipeline_spark.operators.util import (
-    BROADCAST_ROW_LIMIT,
+    _join_counted,
     join_small,
     par_ops,
 )
@@ -174,14 +174,12 @@ def load_dedup_stoplist(spark: SparkSession, table_prefix: str) -> tuple:
 
 def _stoplist_filter(sh_all: DataFrame, banned: DataFrame, stoplist: tuple | None):
     """Anti-join a shingle frame against the stop list: the preloaded
-    (banned, count) pair skips ``join_small``'s per-call count guard,
-    keeping the identical broadcast-or-shuffle decision."""
+    (banned, count) pair skips ``join_small``'s per-call count guard;
+    both paths share its broadcast-or-shuffle decision."""
     if stoplist is None:
         return join_small(sh_all, banned, "shingle", "left_anti")
     pre, n = stoplist
-    if n <= BROADCAST_ROW_LIMIT:
-        return sh_all.join(F.broadcast(pre), "shingle", "left_anti")
-    return sh_all.join(pre, "shingle", "left_anti")
+    return _join_counted(sh_all, pre, n, "shingle", "left_anti")
 
 
 def dedup_index_probe(

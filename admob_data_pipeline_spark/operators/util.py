@@ -84,8 +84,22 @@ def join_small(
     aggregated/materialized (localCheckpoint'd upstream) so the job is
     cheap relative to the corpus scan it guards.
     """
+    return _join_counted(big, small, small.count(), on, how, max_rows)
+
+
+def _join_counted(
+    big: DataFrame,
+    small: DataFrame,
+    n: int,
+    on,
+    how: str,
+    max_rows: int | None = None,
+) -> DataFrame:
+    """``join_small``'s broadcast-or-shuffle decision for a build side
+    whose row count ``n`` is already known (e.g. a preloaded stop list),
+    so callers holding the count skip the count job."""
     limit = BROADCAST_ROW_LIMIT if max_rows is None else max_rows
-    if small.count() <= limit:
+    if n <= limit:
         return big.join(F.broadcast(small), on, how)
     return big.join(small, on, how)
 

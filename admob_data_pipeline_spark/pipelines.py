@@ -5,7 +5,7 @@
 | ------------------------- | ------------------------- |
 | main.py                   | :func:`dual_report_export_job` (network+mediation → union → JSONL) |
 | save_CSV.py               | :func:`filtered_csv_export_job` (app-filtered mediation → CSV) |
-| save_network_CSV.py       | :func:`network_csv_reload_job` (network → CSV + idempotent per-date reload) |
+| save_network_CSV.py       | :func:`network_csv_reload_job` (network → idempotent per-date table write) |
 | fetch_mediation_report.py | :func:`dual_report_export_job` (fixed-schema JSONL variant) |
 | native_CTR_alerts.py      | :func:`ctr_alert_job` (reload → anomaly query → Slack) |
 
@@ -146,8 +146,10 @@ def filtered_csv_export_job(
 def network_csv_reload_job(
     spark: SparkSession, cfg: JobConfig, source: ChunkSource
 ) -> DataFrame | None:
-    """save_network_CSV.py: network scan → CSV staging → idempotent
-    per-date table reload (S8)."""
+    """save_network_CSV.py: network scan → idempotent per-date table
+    write (S8). The reference stages a CSV object and then loads it into
+    BigQuery; here one date-partition overwrite of the table replaces
+    both steps, so no CSV is written."""
     flat = filtered_network_frame(spark, cfg, source)
     if flat is None:
         return None
@@ -186,14 +188,18 @@ def ctr_alert_job(
     run the anomaly query over the (date-partitioned) table, group alert
     lines per app, POST to Slack.
 
-    Pass ``metrics_out`` (a dict) to receive job-health metrics —
-    fact rows scanned, zero-impression rows, alerts fired — gathered via
-    ``DataFrame.observe``: the accumulator-backed mechanism that rides
-    the job's own pass instead of re-running aggregate queries (a
-    separate count() would re-scan the warehouse; at 100 TB the health
-    numbers must be free)."""
-    from pyspark.sql import Observation
+    The scored pairs are collected once, as the reference collects its
+    alert query before posting (S9/A5): one row per (app, ad unit) of
+    today plus the unit-only join's fan-out, so the result is bounded by
+    one day's report, not by the table. Messages are formatted from that
+    snapshot and the returned frame is the same snapshot, so no later
+    action re-scans the table.
 
+    Pass ``metrics_out`` (a dict) to receive job-health metrics:
+    ``scored_pairs`` and ``alerts_fired`` are counted on the collected
+    pairs (a NULL ``is_alert`` is not fired); ``fact_rows`` and
+    ``zero_impression_rows`` come from one aggregate over the table, run
+    only when the metrics are requested."""
     flat = filtered_network_frame(spark, cfg, source)
     table_path = f"{cfg.table_dir}/network_report"
     if flat is not None:
@@ -207,35 +213,26 @@ def ctr_alert_job(
         F.col("clicks").cast("long").alias("clicks"),
         F.col("impressions").cast("long").alias("impressions"),
     )
-    obs_fact = Observation("fact_health")
-    fact = fact.observe(
-        obs_fact,
-        F.count(F.lit(1)).alias("fact_rows"),
-        F.sum((F.col("impressions") == 0).cast("long")).alias(
-            "zero_impression_rows"
-        ),
-    )
     scored = alerts.ctr_anomaly_from_fact(fact, threshold)
-    obs_alerts = Observation("alert_health")
-    scored = scored.observe(
-        obs_alerts,
-        F.count(F.lit(1)).alias("scored_pairs"),
-        F.sum(F.col("is_alert").cast("long")).alias("alerts_fired"),
-    )
-    messages = alerts.format_alert_messages(scored)
+    rows = scored.collect()
+    snapshot = spark.createDataFrame(rows, scored.schema)
+    fired = sum(bool(r.is_alert) for r in rows)
     if slack is not None:
-        if messages.isEmpty():
-            slack.post_text("No native CTR anomalies today.")
+        if fired:
+            slack.post_messages(alerts.format_alert_messages(snapshot))
         else:
-            slack.post_messages(messages)
+            slack.post_text("No native CTR anomalies today.")
     if metrics_out is not None:
-        # Observation.get blocks until an action has run the WHOLE plan;
-        # the Slack isEmpty() probe may short-circuit before the observe
-        # nodes complete, so drive one full (noop-sink) pass explicitly
-        scored.write.format("noop").mode("overwrite").save()
-        metrics_out.update(obs_fact.get)
-        metrics_out.update(obs_alerts.get)
-    return scored
+        health = fact.agg(
+            F.count(F.lit(1)).alias("fact_rows"),
+            F.sum((F.col("impressions") == 0).cast("long")).alias(
+                "zero_impression_rows"
+            ),
+        ).first()
+        metrics_out.update(
+            health.asDict(), scored_pairs=len(rows), alerts_fired=fired
+        )
+    return snapshot
 
 
 def run_for_accounts(

@@ -1086,8 +1086,9 @@ class SlackSink:
 
     def post_messages(self, messages: DataFrame, text_col: str = "message") -> int:
         """Driver-side action after the (distributed) formatting query —
-        the only part of the alert pipeline that leaves the cluster."""
-        n = 0
-        for row in messages.select(text_col).toLocalIterator():
-            n += self.post_text(row[text_col])
-        return n
+        the only part of the alert pipeline that leaves the cluster. The
+        input holds one message per app, so it is collected in one job."""
+        return sum(
+            self.post_text(row[text_col])
+            for row in messages.select(text_col).collect()
+        )

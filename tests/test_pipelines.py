@@ -66,21 +66,48 @@ def test_dual_report_export_writes_jsonl(spark, sf_dir, cfg):
     assert net_rows.count() > 0 and med_rows.count() > 0
 
 
-def test_alert_job_end_to_end(spark, sf_dir, cfg, tmp_path):
-    """Full §3.3 lifecycle: reload table, anomaly query, Slack messages."""
-    # seed the table with 9 days of per-unit history (deterministic)
+@pytest.mark.parametrize(
+    "days, spike, want",
+    [
+        # u1 spikes 5x on day 9 against 8 days of flat history
+        pytest.param(
+            range(1, 10),
+            True,
+            {"fact_rows": 18, "zero_impression_rows": 0, "scored_pairs": 2, "alerts_fired": 1},
+            id="spike",
+        ),
+        # flat history: every pair is scored, none fires
+        pytest.param(
+            range(1, 10),
+            False,
+            {"fact_rows": 18, "zero_impression_rows": 0, "scored_pairs": 2, "alerts_fired": 0},
+            id="quiet",
+        ),
+        # only the report date: no trailing history, so nothing to score
+        pytest.param(
+            range(9, 10),
+            False,
+            {"fact_rows": 2, "zero_impression_rows": 0, "scored_pairs": 0, "alerts_fired": 0},
+            id="report_date_only",
+        ),
+    ],
+)
+def test_alert_job_end_to_end(spark, sf_dir, cfg, days, spike, want):
+    """Full §3.3 lifecycle: reload table, anomaly query, Slack messages,
+    job-health metrics — on alert days and on quiet ones."""
+    import json
+
     import pandas as pd
 
     rows = []
-    for day in range(1, 10):
+    for day in days:
         for unit in ("u1", "u2"):
-            clicks = 100 if (day < 9 or unit == "u2") else 500  # u1 spikes on day 9
             rows.append(
                 {
                     "date": datetime.date(2024, 1, day),
                     "app_name": "app",
                     "ad_unit_name": unit,
-                    "clicks": clicks,
+                    "clicks": 500 if (spike and day == 9 and unit == "u1") else 100,
                     "impressions": 1000,
                 }
             )
@@ -97,22 +124,22 @@ def test_alert_job_end_to_end(spark, sf_dir, cfg, tmp_path):
             li = load_table(spark_, sf_dir, "lineitem").limit(0)
             return chunks_mod.synthesize_chunks_from_lineitem(li)
 
-    scored = pipelines.ctr_alert_job(spark, cfg, NoTodaySource(), slack=sink)
-    got = {r.ad_unit_name: r for r in scored.collect()}
-    assert got["u1"].is_alert and got["u1"].pct_change == 400.0
-    assert not got["u2"].is_alert
-    assert sink.sent == 1 and b"u1" in calls[0]
-
-    # observe()-based job health: metrics ride the job's own pass
-    # (accumulators), no warehouse re-scan
     metrics: dict = {}
-    pipelines.ctr_alert_job(
-        spark, cfg, NoTodaySource(), metrics_out=metrics
+    scored = pipelines.ctr_alert_job(
+        spark, cfg, NoTodaySource(), slack=sink, metrics_out=metrics
     )
-    assert metrics["fact_rows"] == 18  # 9 days x 2 units
-    assert metrics["zero_impression_rows"] == 0
-    assert metrics["scored_pairs"] == 2
-    assert metrics["alerts_fired"] == 1
+    assert metrics == want
+    got = {r.ad_unit_name: r for r in scored.collect()}
+    assert len(got) == want["scored_pairs"]
+    assert sink.sent == 1
+    if spike:
+        assert got["u1"].is_alert and got["u1"].pct_change == 400.0
+        assert not got["u2"].is_alert
+        assert b"u1" in calls[0] and b"u2" not in calls[0]
+    else:
+        assert [json.loads(c)["text"] for c in calls] == [
+            "No native CTR anomalies today."
+        ]
 
 
 def test_multi_account_fanout(cfg):
